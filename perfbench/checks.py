@@ -2,17 +2,20 @@
 generator's own expectations, marts and served answers against DuckDB SQL
 over the raw parquet, training queries against their oracle SQL in DuckDB."""
 import glob
-import hashlib
 import json
 import os
+import sys
 
 import duckdb
 import yaml
 
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
+from verify_local import TABLES, canon  # noqa: E402
+
 
 def check(workload, run_dir, cfg, expect):
     if workload == "yaml_refactor":
-        return check_yaml(cfg, expect)
+        return check_yaml(run_dir, cfg, expect)
     if workload == "build_serve":
         return check_serve(run_dir, cfg)
     return check_ops(run_dir, cfg)
@@ -20,11 +23,11 @@ def check(workload, run_dir, cfg, expect):
 
 # --- yaml_refactor -------------------------------------------------------
 
-def check_yaml(cfg, expect):
+def check_yaml(run_dir, cfg, expect):
     root = cfg["project"]
     docs, types = expect["docs"], expect["types"]
     seed_of = {c: f"seed.bench.seed_{c[1:].split('_')[0]}" for c in docs}
-    problems = []
+    problems, out_of_order = [], []
     for name, m in expect["models"].items():
         layer = f"layer_{m['layer']:02d}"  # template {parent}/{model}.yml, from models/<layer>/
         path = os.path.join(root, "models", layer, layer, f"{name}.yml")
@@ -37,11 +40,12 @@ def check_yaml(cfg, expect):
             problems.append(f"{name}: {len(entries)} entries in {path}")
             continue
         cols = entries[0].get("columns") or []
-        # Set, not order: the sort step's reorder is dropped by the pipeline
-        # (see CHANGES.md, FOUND Transforms.Pipeline), on every seed.
-        if sorted(c.get("name") for c in cols) != sorted(m["columns"]):
-            problems.append(f"{name}: columns {[c.get('name') for c in cols]} != {m['columns']}")
+        names = [c.get("name") for c in cols]
+        if sorted(names) != sorted(m["columns"]):
+            problems.append(f"{name}: columns {names} != {m['columns']}")
             continue
+        if names != m["columns"]:
+            out_of_order.append(name)
         for c in cols:
             n = c["name"]
             meta = c.get("meta") or {}
@@ -54,6 +58,13 @@ def check_yaml(cfg, expect):
     legacy = os.path.join(root, "models", "schema.yml")
     if os.path.exists(legacy) and (yaml.safe_load(open(legacy)) or {}).get("models"):
         problems.append("models/schema.yml still documents models")
+    # A refactor pass whose YAML lists columns out of relation order counts as
+    # failed in the JVM; that count must name the same models as this check.
+    counted = json.load(open(os.path.join(run_dir, "order_drift.json")))
+    if sorted(out_of_order) != counted:
+        problems.append(f"columns out of relation order in {sorted(out_of_order)[:5]} "
+                        f"({len(out_of_order)} models), but the failed pass counted {counted[:5]} "
+                        f"({len(counted)} models)")
     return problems
 
 
@@ -164,45 +175,18 @@ def check_serve(run_dir, cfg):
 
 # --- training_ops --------------------------------------------------------
 
-def canon(df):
-    """Canonical (rows, columns, hash) of a result, in the form
-    tools/verify_local.py compares: columns sorted by name, rows sorted,
-    tab/newline separated cells, NULL literal, second-precision timestamps."""
-    df = df[sorted(df.columns)]
-    if len(df.columns):
-        df = df.sort_values(by=list(df.columns)).reset_index(drop=True)
-    lines = []
-    for row in df.itertuples(index=False):
-        cells = []
-        for v in row:
-            if v is None or (not hasattr(v, "__iter__") and v != v):
-                cells.append("NULL")
-            elif hasattr(v, "strftime"):
-                cells.append(v.strftime("%Y-%m-%d %H:%M:%S"))
-            elif isinstance(v, float):
-                cells.append(repr(v))
-            else:
-                cells.append(str(v))
-        lines.append("\t".join(cells))
-    return len(df), list(df.columns), hashlib.sha256("\n".join(lines).encode()).hexdigest()
-
-
-OPS_TABLES = ["region", "nation", "customer", "supplier", "part", "orders", "lineitem",
-              "events", "documents", "embeddings"]
-
-
 def check_ops(run_dir, cfg):
     problems = []
     oracles = json.load(open(os.path.join(run_dir, "oracle_sql.json")))
-    con = _con(cfg["data"], OPS_TABLES)
+    con = _con(cfg["data"], TABLES)
     for q in cfg["queries"]:
         files = sorted(glob.glob(os.path.join(run_dir, "ops_out", q, "*.parquet")))
         if not files:
             problems.append(f"{q}: no output")
             continue
         try:
-            got = canon(con.sql(f"SELECT * FROM read_parquet({files!r})").fetchdf())
-            want = canon(con.sql(oracles[q]).fetchdf())
+            got = canon(con, con.sql(f"SELECT * FROM read_parquet({files!r})"))[:3]
+            want = canon(con, con.sql(oracles[q]))[:3]
         except Exception as e:  # an oracle or read error is a failed check
             problems.append(f"{q}: {e}")
             continue

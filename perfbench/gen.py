@@ -208,6 +208,8 @@ def project(rng, root, n_models, n_layers, n_seeds, cols_per_model):
         if len(listed) > 2 and rng.random() < 0.5:                  # out of order
             i, j = rng.choice(len(listed), 2, replace=False)
             listed[i], listed[j] = listed[j], listed[i]
+        if name == "m0000":  # on every seed, one model listed in reverse order
+            listed.reverse()
         listed += [f"stale_{name}_{k}" for k in range(int(rng.integers(0, 3)))]
         out += [f"  - name: {name}", f"    description: model {name}", "    columns:"]
         for c in listed:

@@ -77,7 +77,7 @@ final class Rec(val tracer: Option[Tracer]) {
   var timing = false
   val samples = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[Double]]
   val layers = mutable.LinkedHashMap.empty[String, Double]
-  val errors = mutable.ArrayBuffer.empty[String]
+  val errors = mutable.LinkedHashSet.empty[String] // failed operations' messages
 
   def sample(name: String, v: Double): Unit =
     if (timing) synchronized { samples.getOrElseUpdate(name, mutable.ArrayBuffer.empty) += v }
@@ -91,6 +91,7 @@ final class Rec(val tracer: Option[Tracer]) {
     try f finally count(name, (System.nanoTime() - t0) / 1e9)
   }
 
+  /** One operation: counted in `attempted` and, when it throws, in `failed`. */
   def op[T](f: => T): Option[T] = {
     if (timing) synchronized(attempted += 1)
     try Some(f) catch {
@@ -100,8 +101,6 @@ final class Rec(val tracer: Option[Tracer]) {
         None
     }
   }
-
-  def fail(msg: String): Unit = synchronized(errors += msg.take(500))
 
   def phase[T](name: String)(f: => T): T =
     if (!timing) f

@@ -2,9 +2,11 @@ package graftbench
 
 import java.nio.file.{Files, Path, Paths}
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.dataformat.yaml.YAMLFactory
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -20,6 +22,11 @@ final class YamlRefactor(spark: SparkSession, cfg: JsonNode, runDir: Path, rec: 
   private val pristine = Paths.get(cfg.get("pristine").asText())
   private val work = Paths.get(cfg.get("project").asText())
   private val tables = runDir.resolve("tables")
+  private val relationColumns: Map[String, Seq[String]] =
+    cfg.get("schemas").fields().asScala.map(e =>
+      e.getKey -> e.getValue.elements().asScala.map(_.get(0).asText()).toSeq).toMap
+  private val yamlReader = new ObjectMapper(new YAMLFactory())
+  private var orderDrift = Seq.empty[String]
 
   private val ddl: Map[String, DataType] = Map("INTEGER" -> IntegerType,
     "BIGINT" -> LongType, "DOUBLE" -> DoubleType, "VARCHAR" -> StringType,
@@ -48,8 +55,9 @@ final class YamlRefactor(spark: SparkSession, cfg: JsonNode, runDir: Path, rec: 
   private def pass(p: String, check: Boolean): Unit = {
     Introspection.invalidate()
     YamlIO.invalidate()
-    val t0 = System.nanoTime()
-    val ok = rec.op {
+    rec.op {
+      val t0 = System.nanoTime()
+      val problems = mutable.ArrayBuffer.empty[String]
       val project = rec.span(s"$p.project.load_s")(ProjectLoader.load(work.toString))
       val root = project.root
       val executor = new ModelExecutor(spark, project, Some(tables.toString))
@@ -61,7 +69,7 @@ final class YamlRefactor(spark: SparkSession, cfg: JsonNode, runDir: Path, rec: 
       var manifest = rec.span(s"$p.core.restructure_s") {
         val plan = Restructuring.draftPlan(root, executor.manifest, settings, filter)
         rec.count(s"$p.core.restructure_ops", plan.ops.size)
-        if (check && plan.ops.nonEmpty) rec.fail(s"$p planned ${plan.ops.size} moves")
+        if (check && plan.ops.nonEmpty) problems += s"$p planned ${plan.ops.size} moves"
         if (plan.ops.isEmpty) executor.manifest
         else Restructuring.applyPlan(root, plan, executor.manifest, settings)._1
       }
@@ -91,14 +99,48 @@ final class YamlRefactor(spark: SparkSession, cfg: JsonNode, runDir: Path, rec: 
         synced.flatMap(f => SchemaValidation.validate(YamlIO.read(f))) ++
           SchemaValidation.validateCrossFile(synced.map(f => f -> YamlIO.read(f)))
       }
-      findings.filter(_.severity == "error").foreach(f => rec.fail(s"$p schema: ${f.message}"))
+      problems ++= findings.filter(_.severity == "error").map(f => s"$p schema: ${f.message}")
       val written = rec.span(s"$p.core.yaml_commit_s")(YamlIO.commit())
       rec.count(s"$p.core.yaml_files_written", written.size)
       rec.count(s"$p.core.yaml_bytes_written", written.map(f => Files.size(f).toDouble).sum)
-      if (check && written.nonEmpty) rec.fail(s"$p wrote ${written.size} files")
+      if (check && written.nonEmpty) problems += s"$p wrote ${written.size} files"
       val results = rec.span(s"$p.core.validate_models_s")(Validation.validateModels(spark, manifest))
-      results.filter(_.status != "passed").foreach(r => rec.fail(s"$p ${r.nodeId}: ${r.error}"))
+      problems ++= results.filter(_.status != "passed").map(r => s"$p ${r.nodeId}: ${r.error}")
+      rec.sample(s"${p}_s", (System.nanoTime() - t0) / 1e9)
+
+      // untimed output check: the refactored YAML must list each relation's
+      // columns in relation order
+      if (!check) {
+        orderDrift = outOfOrder()
+        if (orderDrift.nonEmpty) problems += s"$p: ${orderDrift.size} models list their " +
+          s"columns out of relation order (first: ${orderDrift.head})"
+      }
+      if (problems.nonEmpty)
+        throw new IllegalStateException(problems.take(3).mkString("; "))
     }
-    if (ok.isDefined) rec.sample(s"${p}_s", (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** Models whose YAML lists exactly their relation's columns, but not in
+    * relation order. Read with a plain YAML parser, not graft's YamlIO. */
+  private def outOfOrder(): Seq[String] = {
+    val s = Files.walk(work.resolve("models"))
+    val files = try s.iterator().asScala.filter(_.toString.endsWith(".yml")).toSeq finally s.close()
+    files.flatMap { f =>
+      Option(yamlReader.readTree(f.toFile)).flatMap(d => Option(d.get("models"))).toSeq
+        .flatMap(_.elements().asScala).flatMap { m =>
+          val name = m.get("name").asText()
+          val listed = Option(m.get("columns")).toSeq.flatMap(_.elements().asScala)
+            .map(_.get("name").asText())
+          val want = relationColumns.getOrElse(name, Nil)
+          if (listed != want && listed.sorted == want.sorted) Some(name) else None
+        }
+    }.sorted
+  }
+
+  /** The last refactor pass's out-of-order models, for the Python-side check. */
+  override def finish(): Unit = {
+    val a = Main.mapper.createArrayNode()
+    orderDrift.foreach(a.add)
+    Files.writeString(runDir.resolve("order_drift.json"), a.toString)
   }
 }

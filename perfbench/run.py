@@ -23,8 +23,6 @@ import subprocess
 import sys
 import time
 
-T_START = time.time()
-
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 BUILD = os.path.join(ROOT, ".bench_build")
@@ -66,16 +64,14 @@ def source_stamp():
 
 
 def build():
-    """Compiles graft + the drivers once per source state; returns seconds
-    spent building (0 when the previous build is current)."""
+    """Compiles graft + the drivers once per source state."""
     if not os.path.isdir(os.path.join(ROOT, "src", "main", "scala")):
         sys.exit("graft sources not found: run from the root of a graft checkout")
     stamp_file = os.path.join(BUILD, "stamp")
     cp_file = os.path.join(BUILD, "classpath")
     stamp = source_stamp()
     if os.path.exists(stamp_file) and os.path.exists(cp_file) and open(stamp_file).read() == stamp:
-        return 0.0
-    t0 = time.time()
+        return
     os.makedirs(BUILD, exist_ok=True)
     env = dict(os.environ, COURSIER_MODE="offline", SBT_OPTS=" ".join([
         "-Dsbt.override.build.repos=true",
@@ -94,7 +90,6 @@ def build():
         f.write(lines[-1].strip())
     with open(stamp_file, "w") as f:
         f.write(stamp)
-    return time.time() - t0
 
 
 # --- inputs --------------------------------------------------------------
@@ -213,16 +208,18 @@ def main():
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
     a = ap.parse_args()
 
-    build_s = build()
+    build()
     run_dir = os.path.join(BUILD, "runs", f"{a.workload}-{os.getpid()}")
     shutil.rmtree(run_dir, ignore_errors=True)
     os.makedirs(run_dir)
     try:
         cfg, expect = prepare(a.workload, a.seed, run_dir)
+        jvm_start = time.time()
         res = run_jvm(a.workload, run_dir, a.seconds, a.trace)
-        setup_s = res["timed_start_ms"] / 1e3 - T_START - build_s
-        problems = list(res["errors"])
-        problems += checks.check(a.workload, run_dir, cfg, expect)
+        setup_s = res["timed_start_ms"] / 1e3 - jvm_start
+        for e in res["errors"][:20]:
+            log("OPERATION FAILED:", e)
+        problems = checks.check(a.workload, run_dir, cfg, expect)
         for p in problems[:20]:
             log("CHECK FAILED:", p)
         if a.trace:
@@ -234,8 +231,7 @@ def main():
         print(json.dumps({"correct": not problems, "attempted": res["attempted"],
                           "failed": res["failed"], "metrics": metrics}))
     finally:
-        if not os.environ.get("PERFBENCH_KEEP"):
-            shutil.rmtree(run_dir, ignore_errors=True)
+        shutil.rmtree(run_dir, ignore_errors=True)
 
 
 if __name__ == "__main__":
