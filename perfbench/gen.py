@@ -10,16 +10,11 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-WORDS = ("a agg batch big column customer data fast filter group hash join key "
-         "line merge order part query row scan slow small sort spark stream "
-         "table the value vector window").split()
-LANGS = ["en", "en", "en", "zh", "de", "fr", "es"]
 SEGMENTS = ["FURNITURE", "HOUSEHOLD", "MACHINERY", "AUTOMOBILE", "BUILDING"]
 PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
 PTYPES = ["SMALL", "MEDIUM", "PROMO", "ECONOMY", "STANDARD", "LARGE"]
 PADJ = ["red", "old", "cold", "hot", "new", "small", "blue", "big"]
 PNOUN = ["bolt", "anvil", "plate", "widget", "gear", "ring", "nut", "spring"]
-EVENT_TYPES = ["click", "signup", "error", "view", "purchase"]
 DAY_US = 86_400_000_000
 EPOCH_1995 = 788_918_400_000_000  # 1995-01-01 in microseconds since epoch
 
@@ -33,12 +28,11 @@ def _write(out, name, cols):
 
 
 def tables(rng, out, sf):
-    """TPC-H-like star schema plus events, documents and embeddings, with the
-    schemas of graft's fixture tables; `sf` scales the row counts."""
+    """TPC-H-like star schema with the schemas of graft's fixture tables;
+    `sf` scales the row counts."""
     os.makedirs(out, exist_ok=True)
     n_cust, n_supp, n_part = int(150_000 * sf), int(10_000 * sf), int(200_000 * sf)
-    n_ord, n_events = int(1_500_000 * sf), int(1_000_000 * sf)
-    n_docs, n_emb = int(50_000 * sf), int(50_000 * sf)
+    n_ord = int(1_500_000 * sf)
 
     _write(out, "region", {
         "r_regionkey": pa.array(range(5), pa.int32()),
@@ -90,36 +84,6 @@ def tables(rng, out, sf):
         "l_returnflag": [("R", "A", "N")[i] for i in rng.integers(0, 3, n_li)],
         "l_linestatus": [("F", "O")[i] for i in rng.integers(0, 2, n_li)],
         "l_shipdate": _ts(odate[l_order] + rng.integers(1, 122, n_li) * DAY_US)})
-    ev_ts = np.sort(1_704_067_200_000_000 + rng.integers(0, 30 * DAY_US, n_events))
-    _write(out, "events", {
-        "event_id": pa.array(range(n_events), pa.int64()),
-        "ts": _ts(ev_ts),
-        "user_id": pa.array(rng.integers(0, max(n_events // 66, 1), n_events), pa.int64()),
-        "event_type": [EVENT_TYPES[i] for i in rng.integers(0, 5, n_events)],
-        "value": np.round(rng.uniform(0, 20, n_events), 2),
-        "props": [json.dumps({"k": int(k)}) for k in rng.integers(0, 100, n_events)]})
-    texts = []
-    for i in range(n_docs):
-        if i > 10 and rng.random() < 0.1:  # planted near-duplicate of an earlier doc
-            words = texts[int(rng.integers(0, i))].split()
-            for j in rng.integers(0, len(words), 2):
-                words[j] = "dup"
-        else:
-            words = [WORDS[w] for w in rng.integers(0, len(WORDS), rng.integers(8, 90))]
-        texts.append(" ".join(words))
-    _write(out, "documents", {
-        "doc_id": pa.array(range(n_docs), pa.int64()),
-        "text": texts,
-        "lang": [LANGS[i] for i in rng.integers(0, len(LANGS), n_docs)],
-        "source": [f"src{i}" for i in rng.integers(0, 20, n_docs)],
-        "n_chars": pa.array([len(t) for t in texts], pa.int64())})
-    centers = rng.normal(0, 0.1, (10, 64))
-    labels = rng.integers(0, 10, n_emb)
-    emb = (centers[labels] + rng.normal(0, 0.1, (n_emb, 64))).astype(np.float32)
-    _write(out, "embeddings", {
-        "vec_id": pa.array(range(n_emb), pa.int64()),
-        "embedding": pa.array(list(emb), pa.list_(pa.float32())),
-        "label": pa.array(labels, pa.int32())})
 
 
 # --- yaml_refactor: a legacy-layout dbt project --------------------------

@@ -35,7 +35,6 @@ object Main {
       val w: Workload = workload match {
         case "yaml_refactor" => new YamlRefactor(spark, cfg, runDir, rec)
         case "build_serve" => new BuildServe(spark, cfg, runDir, rec)
-        case "training_ops" => new TrainingOps(spark, cfg, runDir, rec)
         case other => throw new IllegalArgumentException(s"unknown workload $other")
       }
       w.setup()

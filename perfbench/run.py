@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """graft benchmark: one workload per run, end-to-end or traced.
 
-    python3 perfbench/run.py --workload yaml_refactor|build_serve|training_ops \
+    python3 perfbench/run.py --workload yaml_refactor|build_serve \
         --seed N --seconds S --trace 0|1
 
 Run from the root of a graft checkout. The first run builds graft's sources
@@ -35,12 +35,6 @@ import checks  # noqa: E402
 YAML_MODELS, YAML_LAYERS, YAML_SEEDS, YAML_COLS = 100, 20, 6, 24
 SERVE_SF = 0.01
 SERVE_REQUESTS_PER_CLIENT = 20
-OPS_SF = 0.01
-# The training-ops draw: sorted(random.Random(2026).sample(pool, 3)), where
-# pool is the sorted names of the training-data queries that have an oracle,
-# less the multimodal queries (they read inputs the generator does not make)
-# and the three quadratic exactness baselines (t08, t10, t91).
-OPS_DRAW = ['t122_freshness_sample', 't169_holdout_refresh', 't67_ann_ivfpq_rerank']
 
 SPEC = os.path.join(ROOT, "BENCHMARK.json")
 
@@ -104,18 +98,13 @@ def prepare(workload, seed, run_dir):
         cfg = {"pristine": pristine, "project": os.path.join(run_dir, "project"),
                "schemas": schemas}
         expect = {"models": models, "docs": docs, "types": types}
-    elif workload == "build_serve":
+    else:
         data = os.path.join(run_dir, "data")
         gen.tables(rng, data, SERVE_SF)
         proj = os.path.join(run_dir, "project")
         gen.serve_project(proj)
         clients = gen.serve_requests(rng, data, SERVE_REQUESTS_PER_CLIENT)
         cfg = {"data": data, "project": proj, "tables": gen.SERVE_TABLES, "clients": clients}
-        expect = {}
-    else:
-        data = os.path.join(run_dir, "data")
-        gen.tables(rng, data, OPS_SF)
-        cfg = {"data": data, "queries": OPS_DRAW}
         expect = {}
     with open(os.path.join(run_dir, "config.json"), "w") as f:
         json.dump(cfg, f)
@@ -163,18 +152,16 @@ def end_to_end(workload, res, setup_s):
     s = res["samples"]
     if workload == "yaml_refactor":
         job, op = median(s["refactor_s"]), median(s["recheck_s"]) * 1e3
-    elif workload == "build_serve":
-        job, op = median(s["build_s"]), median(s["query_ms"])
     else:
-        job, op = median(s["sweep_s"]), median(s["query_s"]) * 1e3
+        job, op = median(s["build_s"]), median(s["query_ms"])
     return {"setup_s": setup_s, "job_s": job, "op_p50_ms": op,
             "live_heap_mb": res["live_heap_mb"]}
 
 
 def per_layer(res):
     """Every per-layer metric; a layer the workload does not reach reads 0.
-    Sums are reported per round: per pass for refactor.* and recheck.*, per
-    sweep for ops.*; latencies as medians over every timed sample."""
+    Sums are reported per round (per pass for refactor.* and recheck.*);
+    latencies as medians over every timed sample."""
     rounds = max(res["rounds"], 1)
     layers, s = res["layers"], res["samples"]
     out = {}
@@ -202,7 +189,7 @@ def main():
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     ap = argparse.ArgumentParser()
     ap.add_argument("--workload", required=True,
-                    choices=["yaml_refactor", "build_serve", "training_ops"])
+                    choices=["yaml_refactor", "build_serve"])
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
