@@ -203,8 +203,7 @@ object Bench {
     // the driver parses a bounded stdout tail, which truncates on a
     // 214-query surface (BENCH_r13.json carried parsed: null) — also
     // write the summary whole to a standalone file it can pick up
-    val summaryPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_JSON",
-      "/root/repo/BENCH_SUMMARY.json")
+    val summaryPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_JSON", "BENCH_SUMMARY.json")
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(summaryPath),
         (line + "\n").getBytes("UTF-8"))

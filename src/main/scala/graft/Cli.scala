@@ -40,7 +40,7 @@ object Cli {
     // (dbt-osmosis.yml / project vars / typed setting) — detection
     // alone must not silently override a `fusion-compat: true`.
     val configured = graft.core.SettingsResolver.resolveBool(
-      "fusion-compat", fallback = merged.fusionCompat, merged)
+      graft.core.Setting.FusionCompat, fallback = merged.fusionCompat, merged, None, None)
     merged.copy(fusionCompat = configured || project.fusionManifest)
   }
 

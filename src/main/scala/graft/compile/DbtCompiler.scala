@@ -27,13 +27,16 @@ object DbtCompiler {
     * core/inheritance.py:136-258 — "1" == 1 == 1.0).
     */
   def resolveRef(manifest: Manifest, name: String, version: Option[Any]): Option[NodeMeta] = {
+    val versionedPrefix = s"${name}_v"
+    val versioned = s"${java.util.regex.Pattern.quote(versionedPrefix)}\\d+".r.pattern
     val candidates = manifest.nodes.values.filter(n =>
       (n.resourceType == "model" || n.resourceType == "seed") &&
-        (n.name == name || n.name.matches(s"${java.util.regex.Pattern.quote(name)}_v\\d+"))).toSeq
+        (n.name == name || n.name.startsWith(versionedPrefix) &&
+          versioned.matcher(n.name).matches())).toSeq
     val isVersioned = candidates.exists(n => n.version.isDefined || n.name != name)
     // effective version: explicit > filename suffix > implicit v1 base
     def effective(n: NodeMeta): String = n.version.map(normalizeVersion).getOrElse(
-      if (n.name == name) "1" else normalizeVersion(n.name.stripPrefix(s"${name}_v")))
+      if (n.name == name) "1" else normalizeVersion(n.name.stripPrefix(versionedPrefix)))
     if (candidates.isEmpty) None
     else version match {
       case Some(v) => candidates.find(n => effective(n) == normalizeVersion(v))

@@ -45,9 +45,9 @@ object Introspection {
     */
   def maybePreciseDtype(dt: DataType, settings: EngineSettings,
       node: Option[NodeMeta] = None, column: Option[String] = None): String = {
-    val numPrec = SettingsResolver.resolveBool("numeric-precision-and-scale",
+    val numPrec = SettingsResolver.resolveBool(Setting.NumericPrecisionAndScale,
       settings.numericPrecisionAndScale, settings, node, column)
-    val strLen = SettingsResolver.resolveBool("string-length",
+    val strLen = SettingsResolver.resolveBool(Setting.StringLength,
       settings.stringLength, settings, node, column)
     dt match {
       case d: DecimalType => if (numPrec) s"DECIMAL(${d.precision},${d.scale})" else "DECIMAL"

@@ -1,6 +1,6 @@
 package graft.core
 
-import scala.collection.immutable.ListMap
+import scala.collection.immutable.{ListMap, VectorMap}
 
 /** Engine-owned project model (SURVEY §1.1): the manifest is a small
   * driver-side graph (10³–10⁴ nodes) of models/seeds/sources with
@@ -88,6 +88,11 @@ final case class NodeMeta(
 
   def isEphemeral: Boolean = materialized == "ephemeral"
 
+  /** `columns` hashed by name, built on first use: inheritance looks
+    * up every descendant column's name variants in each ancestor.
+    */
+  private[core] lazy val columnIndex: Map[String, ColumnMeta] = columns.toMap
+
   /** Cross-project node injected from a dbt-loom external manifest
     * (reference config.py:519-561): resolvable by `ref()` and usable
     * as an inheritance ancestor, but never a transform/build target —
@@ -141,7 +146,11 @@ final case class UnitTestMeta(
       */
     expectSql: Option[String] = None)
 
-final case class Manifest(nodes: ListMap[String, NodeMeta]) {
+/** The nodes by unique id, in insertion order. A `VectorMap` keeps
+  * that order with hashed `get` and `updated`, which the transform
+  * pipeline calls once per node per step.
+  */
+final case class Manifest(nodes: VectorMap[String, NodeMeta]) {
   def get(uid: String): Option[NodeMeta] = nodes.get(uid)
   def updated(node: NodeMeta): Manifest =
     copy(nodes = nodes.updated(node.uniqueId, node))
@@ -150,5 +159,5 @@ final case class Manifest(nodes: ListMap[String, NodeMeta]) {
 
 object Manifest {
   def apply(nodes: Seq[NodeMeta]): Manifest =
-    Manifest(ListMap(nodes.map(n => n.uniqueId -> n): _*))
+    Manifest(VectorMap.from(nodes.map(n => n.uniqueId -> n)))
 }

@@ -107,8 +107,9 @@ object PathManagement {
     */
   def pathTemplate(node: NodeMeta, settings: EngineSettings): Option[String] =
     if (node.resourceType == "source") sourceDefinitionPath(settings, node)
-    else SettingsResolver.resolveString("dbt-osmosis", None, settings, Some(node))
-      .orElse(SettingsResolver.resolveString("dbt-osmosis-path", None, settings, Some(node)))
+    else SettingsResolver.resolveString(Setting.DbtOsmosis, None, settings, Some(node), None)
+      .orElse(SettingsResolver.resolveString(Setting.DbtOsmosisPath, None, settings,
+        Some(node), None))
       .orElse(resolveVarsRouting(settings, node))
       .orElse(settings.vars.get("dbt_osmosis_default_path").collect { case s: String => s })
 

@@ -75,143 +75,192 @@ object EngineSettings {
     settings.copy(supplementary = loadSupplementary(projectRoot))
 }
 
+/** One setting name with its accepted key spellings built once:
+  * kebab-case, snake_case, the two `dbt-osmosis` prefixed forms, and,
+  * for the engine-settings fields addressable by name, the typed
+  * accessor of level 6. The names graft reads are constants on the
+  * companion; [[Setting.named]] maps any other name onto the same
+  * shape.
+  */
+final class Setting private (val kebab: String, typed: Option[EngineSettings => Any]) {
+  val snake: String = kebab.replace('-', '_')
+  private[core] val prefixedKebab: String = s"dbt-osmosis-$kebab"
+  private[core] val prefixedSnake: String = s"dbt_osmosis_$snake"
+
+  /** Level 6: a typed value counts as EXPLICIT (and therefore beats
+    * the supplementary file and project vars, reference
+    * core/introspection.py:263-292) only when it differs from the
+    * dataclass default, exactly like the reference's non-default
+    * check.
+    */
+  private[core] val explicitTyped: EngineSettings => Option[Any] = typed match {
+    case None => _ => None
+    case Some(acc) =>
+      val default = acc(EngineSettings())
+      settings => Some(acc(settings)).filter(_ != default)
+  }
+}
+
+object Setting {
+  private def typed(kebab: String, acc: EngineSettings => Any) = new Setting(kebab, Some(acc))
+  private def untyped(kebab: String) = new Setting(kebab, None)
+
+  val AddProgenitorToMeta: Setting = typed("add-progenitor-to-meta", _.addProgenitorToMeta)
+  val UseUnrenderedDescriptions: Setting =
+    typed("use-unrendered-descriptions", _.useUnrenderedDescriptions)
+  val SkipInheritDescriptions: Setting =
+    typed("skip-inherit-descriptions", _.skipInheritDescriptions)
+  val SkipAddTags: Setting = typed("skip-add-tags", _.skipAddTags)
+  val SkipMergeMeta: Setting = typed("skip-merge-meta", _.skipMergeMeta)
+  val ForceInheritDescriptions: Setting =
+    typed("force-inherit-descriptions", _.forceInheritDescriptions)
+  val AddInheritanceForSpecifiedKeys: Setting =
+    typed("add-inheritance-for-specified-keys", _.addInheritanceForSpecifiedKeys)
+  val SkipInheritanceForMetaKeys: Setting =
+    typed("skip-inheritance-for-meta-keys", _.skipInheritanceForMetaKeys)
+  val NumericPrecisionAndScale: Setting =
+    typed("numeric-precision-and-scale", _.numericPrecisionAndScale)
+  val StringLength: Setting = typed("string-length", _.stringLength)
+  val OutputToLower: Setting = typed("output-to-lower", _.outputToLower)
+  val OutputToUpper: Setting = typed("output-to-upper", _.outputToUpper)
+  val SortBy: Setting = typed("sort-by", _.sortBy)
+  val Prefix: Setting = typed("prefix", _.prefix)
+  val FusionCompat: Setting = typed("fusion-compat", _.fusionCompat)
+
+  val SkipAddColumns: Setting = untyped("skip-add-columns")
+  val SkipAddDataTypes: Setting = untyped("skip-add-data-types")
+  val DbtOsmosis: Setting = untyped("dbt-osmosis")
+  val DbtOsmosisPath: Setting = untyped("dbt-osmosis-path")
+
+  private val Known: Map[String, Setting] = Seq(
+    AddProgenitorToMeta, UseUnrenderedDescriptions, SkipInheritDescriptions,
+    SkipAddTags, SkipMergeMeta, ForceInheritDescriptions,
+    AddInheritanceForSpecifiedKeys, SkipInheritanceForMetaKeys,
+    NumericPrecisionAndScale, StringLength, OutputToLower, OutputToUpper,
+    SortBy, Prefix, FusionCompat, SkipAddColumns, SkipAddDataTypes,
+    DbtOsmosis, DbtOsmosisPath).map(s => s.kebab -> s).toMap
+
+  /** The setting for a name in any spelling (`_` and `-` are
+    * interchangeable): one of the constants, or a fresh untyped one.
+    */
+  def named(name: String): Setting = {
+    val kebab = name.replace('_', '-')
+    Known.getOrElse(kebab, untyped(kebab))
+  }
+}
+
 object SettingsResolver {
 
-  private def kebab(name: String): String = name.replace('_', '-')
-  private def snake(name: String): String = name.replace('-', '_')
+  private val OptionsKeys = Seq("dbt-osmosis-options", "dbt_osmosis_options")
+  private val VarsSectionKeys = Seq("dbt-osmosis", "dbt_osmosis")
 
-  /** All accepted spellings of a setting name (kept for callers). */
-  private[core] def keyVariants(name: String): Seq[String] =
-    Seq(name, kebab(name), snake(name),
-      s"dbt-osmosis-${kebab(name)}", s"dbt_osmosis_${snake(name)}").distinct
+  private def directLookup(m: Map[String, Any], s: Setting): Option[Any] =
+    m.get(s.kebab).orElse(m.get(s.snake))
 
-  private def prefixedLookup(m: Map[String, Any], name: String): Option[Any] =
-    m.get(s"dbt-osmosis-${kebab(name)}")
-      .orElse(m.get(s"dbt_osmosis_${snake(name)}"))
-
-  private def directLookup(m: Map[String, Any], name: String): Option[Any] =
-    m.get(kebab(name)).orElse(m.get(snake(name)))
-
-  private def optionsLookup(m: Map[String, Any], name: String): Option[Any] =
-    Seq("dbt-osmosis-options", "dbt_osmosis_options").view.flatMap { key =>
+  private def optionsLookup(m: Map[String, Any], s: Setting): Option[Any] =
+    OptionsKeys.iterator.flatMap { key =>
       m.get(key) match {
-        case Some(opts: Map[_, _]) =>
-          directLookup(opts.asInstanceOf[Map[String, Any]], name)
+        case Some(opts: Map[_, _]) => directLookup(opts.asInstanceOf[Map[String, Any]], s)
         case _ => None
       }
-    }.headOption
+    }.nextOption()
 
   /** One source in the chain: prefixed → (direct, when allowed) →
     * options object (core/introspection.py:891-916 `dict_value`).
     */
-  private def lookup(m: Map[String, Any], name: String,
-      directKeys: Boolean = true): Option[Any] =
-    prefixedLookup(m, name)
-      .orElse(if (directKeys) directLookup(m, name) else None)
-      .orElse(optionsLookup(m, name))
+  private def lookup(m: Map[String, Any], s: Setting, directKeys: Boolean = true): Option[Any] =
+    if (m.isEmpty) None
+    else m.get(s.prefixedKebab)
+      .orElse(m.get(s.prefixedSnake))
+      .orElse(if (directKeys) directLookup(m, s) else None)
+      .orElse(optionsLookup(m, s))
 
   /** Project-vars source (core/introspection.py:552-663): a
     * `dbt-osmosis:`/`dbt_osmosis:` section first (direct → options
     * within it), then prefixed/direct top-level vars.
     */
-  private def varsLookup(vars: Map[String, Any], name: String): Option[Any] = {
-    val section = Seq("dbt-osmosis", "dbt_osmosis").view.flatMap { key =>
+  private def varsLookup(vars: Map[String, Any], s: Setting): Option[Any] =
+    if (vars.isEmpty) None
+    else VarsSectionKeys.iterator.flatMap { key =>
       vars.get(key) match {
-        case Some(s: Map[_, _]) =>
-          val sm = s.asInstanceOf[Map[String, Any]]
-          directLookup(sm, name).orElse(optionsLookup(sm, name))
+        case Some(sec: Map[_, _]) =>
+          val sm = sec.asInstanceOf[Map[String, Any]]
+          directLookup(sm, s).orElse(optionsLookup(sm, s))
         case _ => None
       }
-    }.headOption
-    section.orElse(lookup(vars, name))
-  }
+    }.nextOption().orElse(lookup(vars, s))
 
   private def asMap(v: Any): Map[String, Any] = v match {
     case m: Map[_, _] => m.asInstanceOf[Map[String, Any]]
     case _ => Map.empty
   }
 
-  private val Defaults = EngineSettings()
-
-  /** Typed accessors for the engine-settings fields addressable by
-    * name — level 6 of the chain. A typed value counts as EXPLICIT
-    * (and therefore beats the supplementary file and project vars,
-    * reference core/introspection.py:263-292) only when it differs
-    * from the dataclass default, exactly like the reference's
-    * non-default check.
-    */
-  private val TypedAccessors: Map[String, EngineSettings => Any] = Map(
-    "add-progenitor-to-meta" -> (_.addProgenitorToMeta),
-    "use-unrendered-descriptions" -> (_.useUnrenderedDescriptions),
-    "skip-inherit-descriptions" -> (_.skipInheritDescriptions),
-    "skip-add-tags" -> (_.skipAddTags),
-    "skip-merge-meta" -> (_.skipMergeMeta),
-    "force-inherit-descriptions" -> (_.forceInheritDescriptions),
-    "add-inheritance-for-specified-keys" -> (_.addInheritanceForSpecifiedKeys),
-    "skip-inheritance-for-meta-keys" -> (_.skipInheritanceForMetaKeys),
-    "numeric-precision-and-scale" -> (_.numericPrecisionAndScale),
-    "string-length" -> (_.stringLength),
-    "output-to-lower" -> (_.outputToLower),
-    "output-to-upper" -> (_.outputToUpper),
-    "sort-by" -> (_.sortBy),
-    "prefix" -> (_.prefix),
-    "fusion-compat" -> (_.fusionCompat))
-
-  private def explicitTyped(name: String, settings: EngineSettings): Option[Any] =
-    TypedAccessors.get(kebab(name)).flatMap { acc =>
-      val v = acc(settings)
-      if (v != acc(Defaults)) Some(v) else None
-    }
-
-  /** Resolve `name` for (node, column) through the full precedence
+  /** Resolve a setting for (node, column) through the full precedence
     * chain (see [[EngineSettings]] scaladoc): node-level sources
     * (levels 1-5), then a NON-DEFAULT typed engine setting (level 6 —
     * explicit configuration beats the project files), then the
     * supplementary file and project vars (7-8). Callers' fallbacks in
     * `resolveBool`/`Seq`/`String` are level 9.
     */
-  def resolve(name: String, settings: EngineSettings,
-      node: Option[NodeMeta] = None, column: Option[String] = None): Option[Any] = {
+  def resolve(setting: Setting, settings: EngineSettings,
+      node: Option[NodeMeta], column: Option[String]): Option[Any] = {
     // column config.meta merges OVER column meta (dbt >= 1.10 shape;
     // reference _get_effective_column_meta, introspection.py:316-323)
     val columnMeta: Map[String, Any] = (for {
       n <- node; c <- column; cm <- n.columns.get(c)
-    } yield (cm.meta: Map[String, Any]) ++ asMap(cm.config.getOrElse("meta", null)))
-      .getOrElse(Map.empty)
-    val nodeMeta = node.map(_.meta).getOrElse(Map.empty)
-    val nodeConfig = node.map(_.config).getOrElse(Map.empty)
-    val nodeConfigMeta = asMap(nodeConfig.getOrElse("meta", null))
-    val unrendered = node.map(_.unrenderedConfig).getOrElse(Map.empty)
-    lookup(columnMeta, name)
-      .orElse(lookup(nodeMeta, name))
-      .orElse(lookup(nodeConfig, name, directKeys = false))
-      .orElse(lookup(nodeConfigMeta, name))
-      .orElse(lookup(unrendered, name, directKeys = false))
-      .orElse(explicitTyped(name, settings))
-      .orElse(lookup(settings.supplementary, name))
-      .orElse(varsLookup(settings.vars, name))
+    } yield {
+      val configMeta = asMap(cm.config.getOrElse("meta", null))
+      if (configMeta.isEmpty) cm.meta: Map[String, Any] else cm.meta ++ configMeta
+    }).getOrElse(Map.empty)
+    val fromNode = node.flatMap { n =>
+      lookup(columnMeta, setting)
+        .orElse(lookup(n.meta, setting))
+        .orElse(lookup(n.config, setting, directKeys = false))
+        .orElse(lookup(asMap(n.config.getOrElse("meta", null)), setting))
+        .orElse(lookup(n.unrenderedConfig, setting, directKeys = false))
+    }
+    fromNode
+      .orElse(setting.explicitTyped(settings))
+      .orElse(lookup(settings.supplementary, setting))
+      .orElse(varsLookup(settings.vars, setting))
   }
 
-  def resolveBool(name: String, fallback: Boolean, settings: EngineSettings,
-      node: Option[NodeMeta] = None, column: Option[String] = None): Boolean =
-    resolve(name, settings, node, column) match {
+  def resolve(name: String, settings: EngineSettings,
+      node: Option[NodeMeta] = None, column: Option[String] = None): Option[Any] =
+    resolve(Setting.named(name), settings, node, column)
+
+  def resolveBool(setting: Setting, fallback: Boolean, settings: EngineSettings,
+      node: Option[NodeMeta], column: Option[String]): Boolean =
+    resolve(setting, settings, node, column) match {
       case Some(b: Boolean) => b
       case Some(s: String) => s.equalsIgnoreCase("true")
       case _ => fallback
     }
 
-  def resolveSeq(name: String, fallback: Seq[String], settings: EngineSettings,
-      node: Option[NodeMeta] = None, column: Option[String] = None): Seq[String] =
-    resolve(name, settings, node, column) match {
+  def resolveSeq(setting: Setting, fallback: Seq[String], settings: EngineSettings,
+      node: Option[NodeMeta], column: Option[String]): Seq[String] =
+    resolve(setting, settings, node, column) match {
       case Some(s: Seq[_]) => s.map(_.toString)
       case Some(s: String) => Seq(s)
       case _ => fallback
     }
 
-  def resolveString(name: String, fallback: Option[String], settings: EngineSettings,
-      node: Option[NodeMeta] = None, column: Option[String] = None): Option[String] =
-    resolve(name, settings, node, column) match {
+  def resolveString(setting: Setting, fallback: Option[String], settings: EngineSettings,
+      node: Option[NodeMeta], column: Option[String]): Option[String] =
+    resolve(setting, settings, node, column) match {
       case Some(s: String) => Some(s)
       case _ => fallback
     }
+
+  def resolveBool(name: String, fallback: Boolean, settings: EngineSettings,
+      node: Option[NodeMeta] = None, column: Option[String] = None): Boolean =
+    resolveBool(Setting.named(name), fallback, settings, node, column)
+
+  def resolveSeq(name: String, fallback: Seq[String], settings: EngineSettings,
+      node: Option[NodeMeta] = None, column: Option[String] = None): Seq[String] =
+    resolveSeq(Setting.named(name), fallback, settings, node, column)
+
+  def resolveString(name: String, fallback: Option[String], settings: EngineSettings,
+      node: Option[NodeMeta] = None, column: Option[String] = None): Option[String] =
+    resolveString(Setting.named(name), fallback, settings, node, column)
 }

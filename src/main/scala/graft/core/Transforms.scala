@@ -15,8 +15,10 @@ import graft.core.Introspection.IntrospectedColumn
 object Transforms {
 
   private def caseModes(node: NodeMeta, settings: EngineSettings): (Boolean, Boolean) = (
-    SettingsResolver.resolveBool("output-to-upper", settings.outputToUpper, settings, Some(node)),
-    SettingsResolver.resolveBool("output-to-lower", settings.outputToLower, settings, Some(node)))
+    SettingsResolver.resolveBool(Setting.OutputToUpper, settings.outputToUpper, settings,
+      Some(node), None),
+    SettingsResolver.resolveBool(Setting.OutputToLower, settings.outputToLower, settings,
+      Some(node), None))
 
   /** A20 inject: DB − YAML set difference appended, with case-fold
     * compare when an output case mode is on, optional dtype stamping,
@@ -24,7 +26,8 @@ object Transforms {
     */
   def injectMissingColumns(node: NodeMeta, incoming: ListMap[String, IntrospectedColumn],
       settings: EngineSettings): NodeMeta = {
-    if (SettingsResolver.resolveBool("skip-add-columns", fallback = false, settings, Some(node)))
+    if (SettingsResolver.resolveBool(Setting.SkipAddColumns, fallback = false, settings,
+        Some(node), None))
       return node
     val (toUpper, toLower) = caseModes(node, settings)
     val caseInsensitive = toUpper || toLower
@@ -43,7 +46,8 @@ object Transforms {
           else if (toLower) incomingName.toLowerCase
           else incomingName
         val dtype =
-          if (SettingsResolver.resolveBool("skip-add-data-types", fallback = false, settings, Some(node))) None
+          if (SettingsResolver.resolveBool(Setting.SkipAddDataTypes, fallback = false,
+              settings, Some(node), None)) None
           else Some(
             if (toUpper) meta.dataType.toUpperCase
             else if (toLower) meta.dataType.toLowerCase
@@ -108,7 +112,8 @@ object Transforms {
   /** A24 dispatch on the sort-by setting (core/transforms.py:558-580). */
   def sortColumnsAsConfigured(node: NodeMeta, incoming: ListMap[String, IntrospectedColumn],
       settings: EngineSettings): NodeMeta =
-    SettingsResolver.resolveString("sort-by", Some(settings.sortBy), settings, Some(node)).get match {
+    SettingsResolver.resolveString(Setting.SortBy, Some(settings.sortBy), settings,
+        Some(node), None).get match {
       case "database" => sortColumnsAsInDatabase(node, incoming, settings)
       case "alphabetical" => sortColumnsAlphabetically(node, settings)
       case other => throw new IllegalArgumentException(
@@ -121,18 +126,19 @@ object Transforms {
     */
   def synchronizeDataTypes(node: NodeMeta, incoming: ListMap[String, IntrospectedColumn],
       settings: EngineSettings): NodeMeta = {
-    if (SettingsResolver.resolveBool("skip-add-data-types", fallback = false, settings, Some(node)))
+    if (SettingsResolver.resolveBool(Setting.SkipAddDataTypes, fallback = false, settings,
+        Some(node), None))
       return node
     val cred = settings.credentialsType
     val incomingLower = incoming.map { case (k, v) => k.toLowerCase -> v }
     val columns = node.columns.map { case (name, column) =>
-      if (SettingsResolver.resolveBool("skip-add-data-types",
+      if (SettingsResolver.resolveBool(Setting.SkipAddDataTypes,
           fallback = false, settings, Some(node), Some(name))) {
         name -> column
       } else {
-        val lower = SettingsResolver.resolveBool("output-to-lower",
+        val lower = SettingsResolver.resolveBool(Setting.OutputToLower,
           settings.outputToLower, settings, Some(node), Some(name))
-        val upper = SettingsResolver.resolveBool("output-to-upper",
+        val upper = SettingsResolver.resolveBool(Setting.OutputToUpper,
           settings.outputToUpper, settings, Some(node), Some(name))
         val normalized = Introspection.normalizeColumnName(name, cred)
         val inc = incoming.get(normalized)
@@ -167,6 +173,13 @@ object Transforms {
 
   final case class PipelineResult(manifest: Manifest, steps: Seq[StepResult])
 
+  /** Whether a step changed a node. `NodeMeta` equality compares
+    * `columns` as a map, which ignores order, so a step that only
+    * reorders columns (`sort`) is caught by comparing key order too.
+    */
+  private def changed(next: NodeMeta, current: NodeMeta): Boolean =
+    next != current || !next.columns.keysIterator.sameElements(current.columns.keysIterator)
+
   /** Chainable transform pipeline with per-step timing, applied over
     * topologically sorted candidates (core/transforms.py:53-214 and
     * the fan-out pattern at :226-231). Driver-side sequential: the
@@ -186,7 +199,7 @@ object Transforms {
         for (node <- ordered) {
           val current = m.get(node.uniqueId).get
           val next = op(m, current)
-          if (next != current) { mutated += 1; m = m.updated(next) }
+          if (changed(next, current)) { mutated += 1; m = m.updated(next) }
         }
         StepResult(name, (System.nanoTime() - t0) / 1e9, mutated)
       }

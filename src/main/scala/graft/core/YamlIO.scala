@@ -381,19 +381,22 @@ object YamlIO {
   }
 
   /** Dump with comments restored from `doc.source` (plain dump when
-    * the doc never came from a file).
+    * the doc never came from a file). Returns the text and the node
+    * tree it was serialized from, which stands in for the tree a read
+    * of that text would compose.
     */
-  private def render(doc: YamlDoc): String = {
-    val plain = newYaml().dump(toJava(doc.full))
-    doc.source.fold(plain) { orig =>
-      val yaml = newYaml()
-      Option(yaml.compose(new StringReader(plain))).fold(plain) { fresh =>
+  private def render(doc: YamlDoc): (String, Node) = {
+    val data = toJava(doc.full)
+    val yaml = newYaml()
+    val tree = doc.source.flatMap { orig =>
+      Option(yaml.compose(new StringReader(newYaml().dump(data)))).map { fresh =>
         graftComments(orig, fresh, new java.util.IdentityHashMap[Node, Node]())
-        val out = new StringWriter()
-        yaml.serialize(fresh, out)
-        out.toString
+        fresh
       }
-    }
+    }.getOrElse(yaml.represent(data))
+    val out = new StringWriter()
+    yaml.serialize(tree, out)
+    (out.toString, tree)
   }
 
   /** Atomic write: dump managed+preserved (comments grafted back from
@@ -403,7 +406,7 @@ object YamlIO {
     */
   def write(path: Path, doc: YamlDoc): Unit = {
     Option(path.getParent).foreach(Files.createDirectories(_))
-    val text = render(doc)
+    val (text, tree) = render(doc)
     val tmp = Files.createTempFile(path.getParent, s".${path.getFileName}", ".tmp")
     try {
       Files.writeString(tmp, text)
@@ -412,11 +415,11 @@ object YamlIO {
       Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE,
         StandardCopyOption.REPLACE_EXISTING)
     } finally Files.deleteIfExists(tmp)
-    // re-compose so the cached source tree matches what is on disk
-    // (comments now live at their grafted positions)
-    val written = doc.copy(source =
-      Option(newYaml().compose(new StringReader(text))))
-    cache.synchronized { cache.put(path, CacheEntry(written, dirty = false)) }
+    // the cached source is the tree just serialized, so comments sit
+    // at their grafted positions as they do on disk
+    cache.synchronized {
+      cache.put(path, CacheEntry(doc.copy(source = Some(tree)), dirty = false))
+    }
   }
 
   /** Paths of dirty (buffered, uncommitted) docs — the would-write

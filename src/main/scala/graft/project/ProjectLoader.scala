@@ -2,7 +2,7 @@ package graft.project
 
 import java.nio.file.{Files, Path, Paths}
 
-import scala.collection.immutable.ListMap
+import scala.collection.immutable.{ListMap, VectorMap}
 import scala.jdk.CollectionConverters._
 
 import org.yaml.snakeyaml.Yaml
@@ -91,16 +91,18 @@ object ProjectLoader {
   }
 
   /** Resolve the materialization for a model path from the project's
-    * `models:` config tree (folder-scoped `materialized:` keys, nested
-    * by directory, dbt semantics).
+    * `models:` config tree (folder-scoped `+materialized:` or
+    * `materialized:` keys, nested by directory, dbt semantics).
     */
   private[project] def materializationFor(modelCfg: Map[String, Any], projectName: String,
       relPath: Seq[String]): String = {
+    def own(cfg: Map[String, Any]): Option[String] =
+      cfg.get("+materialized").orElse(cfg.get("materialized")).map(_.toString)
     var cfg = asMap(modelCfg.getOrElse(projectName, Map.empty))
-    var mat = cfg.get("materialized").map(_.toString)
+    var mat = own(cfg)
     for (seg <- relPath.dropRight(1)) {
       cfg = asMap(cfg.getOrElse(seg, Map.empty))
-      cfg.get("materialized").map(_.toString).foreach(m => mat = Some(m))
+      own(cfg).foreach(m => mat = Some(m))
     }
     mat.getOrElse("view")
   }
@@ -248,7 +250,7 @@ object ProjectLoader {
         }
         .filter(p => p.toString.endsWith(".yml") || p.toString.endsWith(".yaml"))
         .sortBy(_.toString)
-    var byId = ListMap(nodes.map(n => n.uniqueId -> n): _*)
+    var byId = VectorMap.from(nodes.map(n => n.uniqueId -> n))
     var unitTests = Vector.empty[UnitTestMeta]
     for (p <- ymlFiles) {
       val doc = loadYaml(p)
@@ -323,11 +325,6 @@ object ProjectLoader {
         }
       }
     }
-
-    // attach versions from filename convention when schema has none
-    byId = ListMap(byId.toSeq.map { case (k, n) =>
-      k -> n
-    }: _*)
 
     val macrosDir = root.resolve("macros")
     val macroPrologue =

@@ -100,6 +100,44 @@ class ProjectBuildSpec extends AnyFunSuite {
     assert(stgPayments.config.get("dbt_osmosis_output_to_lower").contains(true))
   }
 
+  test("versioned refs ignore names that only share the _v prefix") {
+    val nodes = Seq("m", "m_v2", "m_vip", "m_v3x", "m.x_v9").map(n =>
+      graft.core.NodeMeta(s"model.p.$n", n, "model"))
+    val m = graft.core.Manifest(nodes)
+    assert(DbtCompiler.resolveRef(m, "m", None).map(_.name).contains("m_v2"))
+    assert(DbtCompiler.resolveRef(m, "m", Some(1)).map(_.name).contains("m"))
+    assert(DbtCompiler.resolveRef(m, "m_vip", None).map(_.name).contains("m_vip"))
+    assert(DbtCompiler.resolveRef(m, "m.x", None).map(_.name).contains("m.x_v9"))
+    assert(DbtCompiler.resolveRef(m, "n", None).isEmpty)
+  }
+
+  test("a folder's +materialized: table builds its models as tables") {
+    import java.nio.file.Files
+    val root = Files.createTempDirectory("graft_plus_mat")
+    def write(rel: String, s: String): Unit = {
+      val p = root.resolve(rel); Files.createDirectories(p.getParent); Files.writeString(p, s)
+    }
+    write("dbt_project.yml",
+      """name: plusmat
+        |version: '1'
+        |models:
+        |  plusmat:
+        |    +materialized: view
+        |    marts:
+        |      +materialized: table
+        |""".stripMargin)
+    write("models/staging/plusmat_stg.sql", "select 1 as id")
+    write("models/marts/plusmat_mart.sql", "select id from {{ ref('plusmat_stg') }}")
+    val proj = ProjectLoader.load(root.toString)
+    assert(proj.manifest.nodes("model.plusmat.plusmat_mart").materialized == "table")
+    assert(proj.manifest.nodes("model.plusmat.plusmat_stg").materialized == "view")
+    val tables = Files.createTempDirectory("graft_plus_mat_tables")
+    new ModelExecutor(spark, proj, Some(tables.toString)).buildAll()
+    assert(Files.isDirectory(tables.resolve("plusmat_mart")))
+    assert(!Files.exists(tables.resolve("plusmat_stg")))
+    assert(spark.table("plusmat_mart").collect().map(_.getInt(0)).toSeq == Seq(1))
+  }
+
   test("executeSql compiles ad-hoc jinja against the manifest") {
     executor
     val df = executor.executeSql(

@@ -93,6 +93,20 @@ class TransformsSpec extends AnyFunSuite {
     assert(result.manifest.nodes.values.forall(_.tags.contains("seen")))
   }
 
+  test("pipeline keeps a step that only reorders columns") {
+    // NodeMeta equality ignores column order; a sort-only step must
+    // still count as a change and keep its order
+    val n = node(ColumnMeta("b", dataType = Some("INT")), ColumnMeta("a"))
+    val p = Transforms.Pipeline()
+      .andThen("sort", (_, x) =>
+        Transforms.sortColumnsAsConfigured(x, db("a" -> "INT", "b" -> "INT"), settings))
+      .andThen("sort-again", (_, x) =>
+        Transforms.sortColumnsAsConfigured(x, db("a" -> "INT", "b" -> "INT"), settings))
+    val result = p.run(Manifest(Seq(n)))
+    assert(result.steps.map(_.mutated) == Seq(1, 0))
+    assert(result.manifest.get("model.m").get.columns.keys.toSeq == Seq("a", "b"))
+  }
+
   test("settings resolver precedence: column meta over node meta over vars") {
     val n = NodeMeta("model.m", "m", "model",
       meta = Map("sort-by" -> "alphabetical"),

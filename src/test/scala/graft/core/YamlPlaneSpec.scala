@@ -169,6 +169,57 @@ class YamlPlaneSpec extends AnyFunSuite {
     assert(cols2.map(_("name")) == Seq("order_id", "amount"))
   }
 
+  test("a written doc read back from the cache writes the same bytes as one " +
+      "read from disk, comments kept") {
+    val root = tmpRoot()
+    val p = root.resolve("schema.yml")
+    Files.writeString(p,
+      """# header comment
+        |version: 2
+        |x-defaults: &owner_meta
+        |  owner: data-team
+        |models:
+        |  # flagship
+        |  - name: orders
+        |    meta: *owner_meta
+        |    description: All orders  # inline note
+        |    columns:
+        |      # grain
+        |      - name: order_id
+        |        description: Order PK
+        |  - name: customers
+        |    meta:
+        |      <<: *owner_meta
+        |      tier: gold
+        |""".stripMargin)
+    YamlIO.invalidate()
+    val doc = YamlIO.read(p)
+    val models = doc.managed("models").asInstanceOf[Seq[Map[String, Any]]]
+    val cols = models.head("columns").asInstanceOf[Seq[Map[String, Any]]] :+
+      Map[String, Any]("name" -> "amount", "description" -> "Order amount")
+    YamlIO.write(p, doc.copy(managed = doc.managed.updated("models",
+      models.head.updated("columns", cols) +: models.tail)))
+    val first = Files.readString(p)
+    // second write from the cached doc, third from a fresh disk read
+    YamlIO.write(p, YamlIO.read(p))
+    val fromCache = Files.readString(p)
+    YamlIO.invalidate()
+    YamlIO.write(p, YamlIO.read(p))
+    val fromDisk = Files.readString(p)
+    assert(fromCache == first)
+    assert(fromDisk == first)
+    for (c <- Seq("# header comment", "# flagship", "# inline note", "# grain",
+        "&owner_meta", "*owner_meta", "<<: *owner_meta"))
+      assert(first.contains(c), s"lost `$c`:\n$first")
+    // a doc built in memory round-trips the same way
+    val q = root.resolve("fresh.yml")
+    YamlIO.write(q, YamlIO.YamlDoc(ListMap("version" -> 2,
+      "models" -> Seq(ListMap("name" -> "m", "description" -> "d"))), ListMap.empty))
+    val built = Files.readString(q)
+    YamlIO.write(q, YamlIO.read(q))
+    assert(Files.readString(q) == built)
+  }
+
   test("anchors and aliases survive an unchanged round-trip byte-for-byte (A32)") {
     val root = tmpRoot()
     val p = root.resolve("schema.yml")
