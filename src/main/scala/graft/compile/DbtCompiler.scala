@@ -28,11 +28,8 @@ object DbtCompiler {
     */
   def resolveRef(manifest: Manifest, name: String, version: Option[Any]): Option[NodeMeta] = {
     val versionedPrefix = s"${name}_v"
-    val versioned = s"${java.util.regex.Pattern.quote(versionedPrefix)}\\d+".r.pattern
-    val candidates = manifest.nodes.values.filter(n =>
-      (n.resourceType == "model" || n.resourceType == "seed") &&
-        (n.name == name || n.name.startsWith(versionedPrefix) &&
-          versioned.matcher(n.name).matches())).toSeq
+    val candidates = manifest.refCandidates(name).filter(n =>
+      n.resourceType == "model" || n.resourceType == "seed")
     val isVersioned = candidates.exists(n => n.version.isDefined || n.name != name)
     // effective version: explicit > filename suffix > implicit v1 base
     def effective(n: NodeMeta): String = n.version.map(normalizeVersion).getOrElse(

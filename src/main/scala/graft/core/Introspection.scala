@@ -21,9 +21,19 @@ object Introspection {
   final case class IntrospectedColumn(
       name: String, dataType: String, index: Int, comment: Option[String] = None)
 
-  private val cache = new ConcurrentHashMap[String, ListMap[String, IntrospectedColumn]]()
+  /** Keyed by (table, flattenNested, ignorePatterns, precise numeric
+    * types, string lengths).
+    */
+  private val cache =
+    new ConcurrentHashMap[(String, Boolean, Seq[String], Boolean, Boolean),
+      ListMap[String, IntrospectedColumn]]()
 
   def invalidate(): Unit = cache.clear()
+
+  /** Drops the cached columns of one relation, which a rebuild has
+    * just re-created.
+    */
+  def invalidate(table: String): Unit = cache.keySet.removeIf(_._1 == table)
 
   /** Adapter-aware case/quote normalization
     * (core/introspection.py:1250-1256): Snowflake-mode uppercases
@@ -89,8 +99,8 @@ object Introspection {
       node: Option[NodeMeta] = None,
       ignorePatterns: Seq[String] = Nil,
       flattenNested: Boolean = false): ListMap[String, IntrospectedColumn] = {
-    val key = s"$table|$flattenNested|${ignorePatterns.mkString(",")}|" +
-      s"${settings.numericPrecisionAndScale}|${settings.stringLength}"
+    val key = (table, flattenNested, ignorePatterns, settings.numericPrecisionAndScale,
+      settings.stringLength)
     Option(cache.get(key)).getOrElse {
       val schema = spark.table(table).schema
       val leaves: Seq[(String, DataType)] =

@@ -1,6 +1,6 @@
 package graft.core
 
-import scala.collection.immutable.{ListMap, VectorMap}
+import scala.collection.immutable.{HashMap, ListMap, VectorMap}
 
 /** Engine-owned project model (SURVEY §1.1): the manifest is a small
   * driver-side graph (10³–10⁴ nodes) of models/seeds/sources with
@@ -91,7 +91,7 @@ final case class NodeMeta(
   /** `columns` hashed by name, built on first use: inheritance looks
     * up every descendant column's name variants in each ancestor.
     */
-  private[core] lazy val columnIndex: Map[String, ColumnMeta] = columns.toMap
+  private[core] lazy val columnIndex: Map[String, ColumnMeta] = HashMap.from(columns)
 
   /** Cross-project node injected from a dbt-loom external manifest
     * (reference config.py:519-561): resolvable by `ref()` and usable
@@ -151,13 +151,46 @@ final case class UnitTestMeta(
   * pipeline calls once per node per step.
   */
 final case class Manifest(nodes: VectorMap[String, NodeMeta]) {
+  /** See [[refCandidates]]; built on first use. */
+  @volatile private var refIndex: Map[String, Vector[String]] = _
+
   def get(uid: String): Option[NodeMeta] = nodes.get(uid)
-  def updated(node: NodeMeta): Manifest =
-    copy(nodes = nodes.updated(node.uniqueId, node))
+
+  /** Replaces (or appends) one node. When it replaces a node of the
+    * same name, the next manifest shares this one's ref index: the
+    * index keys and the manifest order are unchanged.
+    */
+  def updated(node: NodeMeta): Manifest = {
+    val next = copy(nodes = nodes.updated(node.uniqueId, node))
+    if (nodes.get(node.uniqueId).exists(_.name == node.name)) next.refIndex = refIndex
+    next
+  }
+
   def models: Iterable[NodeMeta] = nodes.values.filter(_.resourceType == "model")
+
+  /** The nodes a `ref(name)` may reach by name, in manifest order:
+    * those named `name`, and dbt's versioned `<name>_v<N>`. Callers
+    * filter by resource type.
+    */
+  def refCandidates(name: String): Seq[NodeMeta] = {
+    var index = refIndex
+    if (index == null) {
+      index = nodes.valuesIterator.flatMap { n =>
+        val keys = n.name match {
+          case Manifest.Versioned(base) => Seq(n.name, base)
+          case _ => Seq(n.name)
+        }
+        keys.map(_ -> n.uniqueId)
+      }.toSeq.groupMap(_._1)(_._2).view.mapValues(_.toVector).toMap
+      refIndex = index
+    }
+    index.getOrElse(name, Vector.empty).flatMap(nodes.get)
+  }
 }
 
 object Manifest {
   def apply(nodes: Seq[NodeMeta]): Manifest =
     Manifest(VectorMap.from(nodes.map(n => n.uniqueId -> n)))
+
+  private val Versioned = "(?s)(.*)_v\\d+".r
 }

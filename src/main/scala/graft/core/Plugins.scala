@@ -59,9 +59,13 @@ object ColumnCandidatePlugins {
   private val builtIns: Seq[ColumnCandidatePlugin] =
     Seq(new FuzzyCaseMatching, new FuzzyPrefixMatching)
 
+  /** Looked up through the loader of the plugin trait itself, not the
+    * context loader of whichever thread (a pool thread, say) first
+    * asks, so discovery does not depend on that thread.
+    */
   private lazy val discovered: Seq[ColumnCandidatePlugin] =
-    java.util.ServiceLoader.load(classOf[ColumnCandidatePlugin])
-      .iterator().asScala.toSeq
+    java.util.ServiceLoader.load(classOf[ColumnCandidatePlugin],
+      classOf[ColumnCandidatePlugin].getClassLoader).iterator().asScala.toSeq
 
   private val registered =
     new java.util.concurrent.CopyOnWriteArrayList[ColumnCandidatePlugin]()

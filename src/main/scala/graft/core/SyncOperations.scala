@@ -312,13 +312,15 @@ object SyncOperations {
 
   /** Sync many nodes grouped one-write-per-file
     * (core/sync_operations.py:823-841): resolve each node's target
-    * YAML, fold nodes into per-file docs, buffer them.
+    * YAML, fold nodes into per-file docs, buffer them. Files are
+    * synced concurrently on [[Parallel]]'s pool; the paths come back
+    * sorted.
     */
   def syncNodes(projectRoot: java.nio.file.Path, nodes: Seq[NodeMeta],
       settings: EngineSettings): Seq[java.nio.file.Path] = {
     val byFile = nodes.groupBy(n =>
       PathManagement.targetYamlPath(projectRoot, n, settings))
-    byFile.toSeq.sortBy(_._1.toString).map { case (path, fileNodes) =>
+    Parallel.map(byFile.toSeq.sortBy(_._1.toString)) { case (path, fileNodes) =>
       val orig = YamlIO.read(path)
       var doc = orig
       syncOrder(fileNodes).foreach(n => doc = syncNodeToDoc(doc, n, settings))

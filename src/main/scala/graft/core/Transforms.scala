@@ -1,6 +1,8 @@
 package graft.core
 
-import scala.collection.immutable.ListMap
+import scala.collection.immutable.{BitSet, ListMap}
+import scala.collection.mutable
+import scala.util.{Failure, Success}
 
 import org.apache.spark.sql.SparkSession
 
@@ -181,9 +183,25 @@ object Transforms {
     next != current || !next.columns.keysIterator.sameElements(current.columns.keysIterator)
 
   /** Chainable transform pipeline with per-step timing, applied over
-    * topologically sorted candidates (core/transforms.py:53-214 and
-    * the fan-out pattern at :226-231). Driver-side sequential: the
-    * work is metadata-sized; model *execution* is the distributed part.
+    * topologically sorted candidates (core/transforms.py:53-214) and
+    * fanned out like the reference's thread pool (:226-231).
+    *
+    * Contract: an op may read from the manifest only the node it is
+    * given and that node's ancestors (through `deps`), must return that
+    * same node (same `uniqueId`), and must be safe to call from several
+    * threads at once. Every op in the tree keeps it: inject, remove,
+    * sort and sync-types read the node alone; inherit reads its
+    * `ancestorTree`, and a progenitor override applies only to an
+    * ancestor; synthesize reads the node's `deps`.
+    *
+    * Under that contract each step runs its candidates in waves (see
+    * [[Pipeline.waves]]): every op of a wave runs concurrently against
+    * the manifest as it stood when the wave began, and then the
+    * results are applied in topological order. Each op therefore sees
+    * exactly the ancestors it would see if the candidates ran one by
+    * one in topological order, so the manifest and `mutated` are those
+    * of a sequential run. If ops throw, the exception of the first
+    * failing node in topological order is rethrown.
     */
   final case class Pipeline(steps: Seq[(String, (Manifest, NodeMeta) => NodeMeta)]) {
     def andThen(name: String, op: (Manifest, NodeMeta) => NodeMeta): Pipeline =
@@ -195,12 +213,23 @@ object Transforms {
       val results = steps.map { case (name, op) =>
         val t0 = System.nanoTime()
         var mutated = 0
-        val ordered = NodeFilters.topologicalSort(NodeFilters.candidates(m, filter))
-        for (node <- ordered) {
-          val current = m.get(node.uniqueId).get
-          val next = op(m, current)
-          if (changed(next, current)) { mutated += 1; m = m.updated(next) }
+        val ordered = NodeFilters.topologicalSort(NodeFilters.candidates(m, filter)).toIndexedSeq
+        var firstFailure = Int.MaxValue
+        var failure: Throwable = null
+        for (wave <- Pipeline.waves(m, ordered)) {
+          // a node after a known failure cannot change what is thrown
+          val todo = wave.filter(_ < firstFailure)
+          val start = m
+          val current = todo.map(i => start.get(ordered(i).uniqueId).get)
+          val outcomes = Parallel.attempt(current)(op(start, _))
+          for (k <- todo.indices) outcomes(k) match {
+            case Success(next) =>
+              if (changed(next, current(k))) { mutated += 1; m = m.updated(next) }
+            case Failure(e) =>
+              if (todo(k) < firstFailure) { firstFailure = todo(k); failure = e }
+          }
         }
+        if (failure != null) throw failure
         StepResult(name, (System.nanoTime() - t0) / 1e9, mutated)
       }
       PipelineResult(m, results)
@@ -209,5 +238,49 @@ object Transforms {
 
   object Pipeline {
     def apply(): Pipeline = Pipeline(Seq.empty)
+
+    /** Groups the positions of `ordered` (a topological order of the
+      * candidates) into waves that may run concurrently, earliest wave
+      * first, each in ascending position. A node's candidate ancestors
+      * are found through the `deps` of every manifest node, so a path
+      * through a node that is not a candidate counts too. Such an
+      * ancestor may come after the node in `ordered`, and then a
+      * sequential run shows the node that ancestor's old value. So a
+      * node's wave is one past that of every candidate ancestor before
+      * it, and no later than that of every candidate ancestor after it.
+      * A dependency cycle outside the candidates puts every node in a
+      * wave of its own.
+      */
+    private[core] def waves(manifest: Manifest, ordered: IndexedSeq[NodeMeta]): Seq[Seq[Int]] = {
+      val position = ordered.iterator.map(_.uniqueId).zipWithIndex.toMap
+      val memo = mutable.HashMap.empty[String, BitSet]
+      val visiting = mutable.HashSet.empty[String]
+      var cyclic = false
+      // positions of the candidate ancestors of `uid`
+      def ancestors(uid: String): BitSet = memo.getOrElse(uid, {
+        if (!visiting.add(uid)) { cyclic = true; BitSet.empty }
+        else {
+          val deps = manifest.get(uid).fold(Seq.empty[String])(_.deps)
+          val found = deps.foldLeft(BitSet.empty) { (acc, d) =>
+            if (manifest.get(d).isEmpty) acc
+            else acc ++ ancestors(d) ++ position.get(d)
+          }
+          visiting -= uid
+          memo(uid) = found
+          found
+        }
+      })
+      val wave = new Array[Int](ordered.size)
+      val floor = new Array[Int](ordered.size)
+      for (i <- ordered.indices) {
+        val up = ancestors(ordered(i).uniqueId)
+        var w = floor(i)
+        up.foreach(a => if (a < i) w = math.max(w, wave(a) + 1))
+        wave(i) = w
+        up.foreach(a => if (a > i) floor(a) = math.max(floor(a), w))
+      }
+      if (cyclic) ordered.indices.map(Seq(_))
+      else ordered.indices.groupBy(wave(_)).toSeq.sortBy(_._1).map(_._2.sorted)
+    }
   }
 }

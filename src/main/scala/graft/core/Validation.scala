@@ -1,6 +1,6 @@
 package graft.core
 
-import scala.concurrent.{Await, Future}
+import scala.concurrent.{Await, Future, Promise, TimeoutException}
 import scala.concurrent.duration._
 import scala.util.{Failure, Success, Try}
 
@@ -18,25 +18,42 @@ object Validation {
 
   def validateSql(spark: SparkSession, sql: String,
       timeout: Duration = 30.seconds): Option[String] = {
-    import scala.concurrent.ExecutionContext.Implicits.global
+    import Parallel.executor
     Try(Await.result(Future {
       spark.sql(sql).queryExecution.analyzed
     }, timeout)) match {
       case Success(_) => None
-      case Failure(e) => Some(e.getMessage.linesIterator.take(3).mkString(" "))
+      case Failure(e) => Some(firstLines(e))
     }
   }
 
-  /** Validate every compiled model in the manifest. */
+  private def firstLines(e: Throwable): String = e.getMessage.linesIterator.take(3).mkString(" ")
+
+  /** Validate every compiled model in the manifest, in `uniqueId`
+    * order. Models are analysed concurrently on [[Parallel]]'s pool;
+    * each one's timeout runs from when its analysis starts.
+    */
   def validateModels(spark: SparkSession, manifest: Manifest,
-      timeout: Duration = 30.seconds): Seq[Result] =
-    manifest.models.toSeq.sortBy(_.uniqueId).map { node =>
-      node.compiledCode match {
-        case None => Result(node.uniqueId, "skipped", Some("not compiled"))
-        case Some(sql) => validateSql(spark, sql, timeout) match {
-          case None => Result(node.uniqueId, "passed", None)
-          case Some(err) => Result(node.uniqueId, "failed", Some(err))
-        }
+      timeout: Duration = 30.seconds): Seq[Result] = {
+    import Parallel.executor
+    val models = manifest.models.toSeq.sortBy(_.uniqueId)
+    val analyses = models.map(_.compiledCode.map { sql =>
+      val started = Promise[Long]()
+      started -> Future {
+        started.success(System.nanoTime())
+        spark.sql(sql).queryExecution.analyzed
       }
+    })
+    models.zip(analyses).map {
+      case (node, None) => Result(node.uniqueId, "skipped", Some("not compiled"))
+      case (node, Some((started, analysis))) =>
+        val left = timeout - (System.nanoTime() - Await.result(started.future, Duration.Inf)).nanos
+        Try(Await.result(analysis, left)) match {
+          case Success(_) => Result(node.uniqueId, "passed", None)
+          case Failure(_: TimeoutException) if !analysis.isCompleted =>
+            Result(node.uniqueId, "failed", Some(s"Future timed out after [$timeout]"))
+          case Failure(e) => Result(node.uniqueId, "failed", Some(firstLines(e)))
+        }
     }
+  }
 }

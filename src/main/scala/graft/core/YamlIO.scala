@@ -107,24 +107,33 @@ object YamlIO {
     preserved = ListMap(doc.toSeq.filterNot { case (k, _) => ManagedKeys.contains(k) }: _*),
     keyOrder = doc.keys.toSeq)
 
-  /** Cached read; missing file → empty doc. */
-  def read(path: Path): YamlDoc = cache.synchronized {
-    Option(cache.get(path)).map(_.doc).getOrElse {
-      val doc =
-        if (!Files.exists(path)) YamlDoc(ListMap.empty, ListMap.empty)
-        else {
-          val text = Files.readString(path)
-          toScala(newYaml().load[Any](text)) match {
-            case m: Map[_, _] =>
-              partition(m.asInstanceOf[Map[String, Any]])
-                .copy(source = Option(newYaml().compose(new StringReader(text))))
-            case _ => YamlDoc(ListMap.empty, ListMap.empty)
-          }
+  /** Cached read; missing file → empty doc. The file is parsed
+    * outside the cache lock, so reads of distinct files run in
+    * parallel; an entry cached meanwhile (a buffered edit, or another
+    * read) wins over the parse.
+    */
+  def read(path: Path): YamlDoc =
+    cache.synchronized(Option(cache.get(path))).map(_.doc).getOrElse {
+      val doc = parse(path)
+      cache.synchronized {
+        Option(cache.get(path)).map(_.doc).getOrElse {
+          cache.put(path, CacheEntry(doc, dirty = false))
+          doc
         }
-      cache.put(path, CacheEntry(doc, dirty = false))
-      doc
+      }
     }
-  }
+
+  private def parse(path: Path): YamlDoc =
+    if (!Files.exists(path)) YamlDoc(ListMap.empty, ListMap.empty)
+    else {
+      val text = Files.readString(path)
+      toScala(newYaml().load[Any](text)) match {
+        case m: Map[_, _] =>
+          partition(m.asInstanceOf[Map[String, Any]])
+            .copy(source = Option(newYaml().compose(new StringReader(text))))
+        case _ => YamlDoc(ListMap.empty, ListMap.empty)
+      }
+    }
 
   /** Buffer an updated doc (pins the cache entry until committed). */
   def buffer(path: Path, doc: YamlDoc): Unit = cache.synchronized {
@@ -405,6 +414,14 @@ object YamlIO {
     * (core/schema/writer.py:90-106,170-210).
     */
   def write(path: Path, doc: YamlDoc): Unit = {
+    val cached = written(doc, writeFile(path, doc))
+    cache.synchronized(cache.put(path, cached))
+  }
+
+  /** Renders and atomically writes `doc`; returns the node tree the
+    * text was serialized from.
+    */
+  private def writeFile(path: Path, doc: YamlDoc): Node = {
     Option(path.getParent).foreach(Files.createDirectories(_))
     val (text, tree) = render(doc)
     val tmp = Files.createTempFile(path.getParent, s".${path.getFileName}", ".tmp")
@@ -415,12 +432,15 @@ object YamlIO {
       Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE,
         StandardCopyOption.REPLACE_EXISTING)
     } finally Files.deleteIfExists(tmp)
-    // the cached source is the tree just serialized, so comments sit
-    // at their grafted positions as they do on disk
-    cache.synchronized {
-      cache.put(path, CacheEntry(doc.copy(source = Some(tree)), dirty = false))
-    }
+    tree
   }
+
+  /** The clean cache entry of a written doc: its source is the tree
+    * just serialized, so comments sit at their grafted positions as
+    * they do on disk.
+    */
+  private def written(doc: YamlDoc, tree: Node): CacheEntry =
+    CacheEntry(doc.copy(source = Some(tree)), dirty = false)
 
   /** Paths of dirty (buffered, uncommitted) docs — the would-write
     * set a dry run reports instead of committing.
@@ -429,10 +449,24 @@ object YamlIO {
     cache.asScala.toSeq.collect { case (p, e) if e.dirty => p }.sorted
   }
 
-  /** Commit all dirty buffered docs; returns the written paths. */
-  def commit(): Seq[Path] = cache.synchronized {
-    val dirty = cache.asScala.toSeq.collect { case (p, e) if e.dirty => p -> e }
-    dirty.foreach { case (p, e) => write(p, e.doc) }
+  /** Commit all dirty buffered docs; returns the written paths. The
+    * files are rendered and written concurrently on [[Parallel]]'s
+    * pool, outside the cache lock. A doc buffered again while it was
+    * being written stays dirty; a failed write leaves its entry dirty,
+    * and the first failure, in the returned order, is rethrown once
+    * every write has ended.
+    */
+  def commit(): Seq[Path] = {
+    val dirty = cache.synchronized {
+      cache.asScala.toSeq.collect { case (p, e) if e.dirty => p -> e }
+    }
+    val trees = Parallel.attempt(dirty) { case (p, e) => writeFile(p, e.doc) }
+    cache.synchronized {
+      dirty.zip(trees).foreach { case ((p, e), tree) =>
+        if (tree.isSuccess && (cache.get(p) eq e)) cache.put(p, written(e.doc, tree.get))
+      }
+    }
+    trees.foreach(_.get)
     dirty.map(_._1)
   }
 

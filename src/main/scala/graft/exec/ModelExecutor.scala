@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.compile.DbtCompiler
-import graft.core.{Manifest, NodeFilters, NodeMeta}
+import graft.core.{Introspection, Manifest, NodeFilters, NodeMeta}
 import graft.project.ProjectLoader.Project
 
 /** Model build + ad-hoc SQL execution (A34/A35): compile each model's
@@ -44,6 +44,7 @@ final class ModelExecutor(spark: SparkSession, project: Project,
     val path = project.root.resolve(node.path).toString
     spark.read.option("header", "true").option("inferSchema", "true")
       .csv(path).createOrReplaceTempView(node.name)
+    Introspection.invalidate(node.name)
   }
 
   private def relationDir(node: NodeMeta): java.nio.file.Path =
@@ -148,6 +149,8 @@ final class ModelExecutor(spark: SparkSession, project: Project,
       case _ => // view | ephemeral
         spark.sql(sql).createOrReplaceTempView(node.name)
     }
+    // the relation is new, so its cached columns are stale
+    Introspection.invalidate(node.name)
   }
 
   /** dbt snapshot (SCD2) materialization — the dataflow lives in

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.compile.{DbtCompiler, Jinja}
-import graft.core.{EngineSettings, Inheritance}
+import graft.core.{EngineSettings, Inheritance, Introspection}
 import graft.exec.ModelExecutor
 import graft.project.ProjectLoader
 
@@ -319,5 +319,38 @@ class ProjectBuildSpec extends AnyFunSuite {
       graft.core.Manifest(Seq.empty[graft.core.NodeMeta]), Map.empty, Map.empty,
       fusionManifest = false)
     assert(!Cli.settingsFor(neither).fusionCompat)
+  }
+
+  test("a ref resolves by name across manifest updates that rename or add nodes") {
+    val m0 = graft.core.Manifest(Seq("a", "b", "b_v2").map(n =>
+      graft.core.NodeMeta(s"model.p.$n", n, "model")))
+    assert(DbtCompiler.resolveRef(m0, "b", None).map(_.name).contains("b_v2"))
+    // same name: the updated node is found
+    val m1 = m0.updated(m0.nodes("model.p.a").copy(rawCode = "select 1"))
+    assert(DbtCompiler.resolveRef(m1, "a", None).map(_.rawCode).contains("select 1"))
+    // renamed: found under the new name only
+    val m2 = m1.updated(m1.nodes("model.p.b_v2").copy(name = "c"))
+    assert(DbtCompiler.resolveRef(m2, "b", None).map(_.name).contains("b"))
+    assert(DbtCompiler.resolveRef(m2, "c", None).map(_.uniqueId).contains("model.p.b_v2"))
+    // added: a seed of the same name as a model keeps manifest order
+    val m3 = m2.updated(graft.core.NodeMeta("seed.p.a", "a", "seed"))
+    assert(m3.refCandidates("a").map(_.uniqueId) == Seq("model.p.a", "seed.p.a"))
+    assert(DbtCompiler.resolveRef(m3, "a", None).map(_.uniqueId).contains("model.p.a"))
+  }
+
+  test("a rebuilt model is introspected with its new columns") {
+    import java.nio.file.Files
+    val root = Files.createTempDirectory("graft_rebuild")
+    def write(rel: String, s: String): Unit = {
+      val p = root.resolve(rel); Files.createDirectories(p.getParent); Files.writeString(p, s)
+    }
+    write("dbt_project.yml", "name: rebuild\nversion: '1'\n")
+    write("models/rebuilt_m.sql", "select 1 as a")
+    val settings = EngineSettings()
+    new ModelExecutor(spark, ProjectLoader.load(root.toString)).buildAll()
+    assert(Introspection.getColumns(spark, "rebuilt_m", settings).keys.toSeq == Seq("a"))
+    write("models/rebuilt_m.sql", "select 1 as a, 'x' as b")
+    new ModelExecutor(spark, ProjectLoader.load(root.toString)).buildAll()
+    assert(Introspection.getColumns(spark, "rebuilt_m", settings).keys.toSeq == Seq("a", "b"))
   }
 }

@@ -281,4 +281,12 @@ class InheritanceSpec extends AnyFunSuite {
     val y = node("model.y", Seq("model.x"), col("x"))
     assertThrows[IllegalStateException](NodeFilters.topologicalSort(Seq(x, y)))
   }
+
+  test("ancestor columns are looked up through a hash index, not a list walk") {
+    val n = node("model.p.wide", Nil, (1 to 50).map(i => col(s"c$i")): _*)
+    assert(n.columnIndex.isInstanceOf[scala.collection.immutable.HashMap[_, _]])
+    assert(n.columnIndex.keySet == n.columns.keySet)
+    assert(Inheritance.findMatchingColumn(n, Seq("missing", "c7", "c8")).map(_.name)
+      .contains("c7"))
+  }
 }

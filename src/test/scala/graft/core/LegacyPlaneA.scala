@@ -5,8 +5,9 @@ import scala.collection.immutable.ListMap
 /** Reference copies of the settings chain and the column knowledge
   * graph as they were before both were reworked to resolve each
   * setting once per (node, column) and to look ancestor columns up
-  * through a hashed index. Only the object names differ from that
-  * code. [[PlaneAEquivalenceSpec]] checks the current implementation
+  * through a hashed index, and of the sequential transform pipeline
+  * ([[LegacyPipeline]]). Only the names differ from that code.
+  * [[PlaneAEquivalenceSpec]] checks the current implementation
   * against these over random inputs.
   */
 object LegacySettingsResolver {
@@ -529,5 +530,33 @@ object LegacyInheritance {
       }
     }
     node.copy(columns = newColumns)
+  }
+}
+
+/** Reference copy of the transform pipeline as it was before it ran
+  * each wave of candidates concurrently: one node at a time, in
+  * topological order. Only the names differ from that code.
+  */
+final case class LegacyPipeline(steps: Seq[(String, (Manifest, NodeMeta) => NodeMeta)]) {
+  import Transforms.{PipelineResult, StepResult}
+
+  private def changed(next: NodeMeta, current: NodeMeta): Boolean =
+    next != current || !next.columns.keysIterator.sameElements(current.columns.keysIterator)
+
+  def run(manifest: Manifest,
+      filter: NodeFilters.NodeFilter = NodeFilters.NodeFilter()): PipelineResult = {
+    var m = manifest
+    val results = steps.map { case (name, op) =>
+      val t0 = System.nanoTime()
+      var mutated = 0
+      val ordered = NodeFilters.topologicalSort(NodeFilters.candidates(m, filter))
+      for (node <- ordered) {
+        val current = m.get(node.uniqueId).get
+        val next = op(m, current)
+        if (changed(next, current)) { mutated += 1; m = m.updated(next) }
+      }
+      StepResult(name, (System.nanoTime() - t0) / 1e9, mutated)
+    }
+    PipelineResult(m, results)
   }
 }

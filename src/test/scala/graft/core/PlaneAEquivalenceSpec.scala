@@ -238,4 +238,117 @@ class PlaneAEquivalenceSpec extends AnyFunSuite {
       }
     }
   }
+
+  // --- transform pipeline over random DAGs --------------------------
+
+  private case class PipelineCase(nodes: Seq[NodeMeta],
+      incoming: Map[String, ListMap[String, Introspection.IntrospectedColumn]],
+      filter: NodeFilters.NodeFilter, settings: EngineSettings)
+
+  /** A node whose uid sorts at random, so that Kahn's tie order puts
+    * some nodes ahead of ancestors they reach only through a node that
+    * is not a candidate (ephemeral, loom-injected, or outside the
+    * filter).
+    */
+  private def pipelineNode(id: String, earlier: Seq[String]): Gen[NodeMeta] = for {
+    kind <- Gen.frequency(6 -> "model", 1 -> "seed", 1 -> "source")
+    k <- Gen.frequency(3 -> 0, 4 -> 1, 2 -> 2)
+    deps <- Gen.pick(math.min(k, earlier.size), earlier).map(_.toSeq)
+    picked <- Gen.someOf(BaseColumns)
+    names <- Gen.sequence[Seq[String], String](picked.toSeq.map(caseVariant))
+    cols <- Gen.sequence[Seq[ColumnMeta], ColumnMeta](names.distinct.map(column(_, deps)))
+    nodeMeta <- metaMap(deps)
+    ephemeral <- Gen.frequency(5 -> false, 1 -> true)
+    loom <- Gen.frequency(9 -> false, 1 -> true)
+    folder <- Gen.oneOf("staging", "marts")
+  } yield NodeMeta(s"$kind.p.$id", id, kind, fqn = Seq("p", folder, id), deps = deps,
+    meta = nodeMeta ++ (if (loom) Seq("dbt-osmosis-loom-injected" -> true) else Nil),
+    columns = ListMap(cols.map(c => c.name -> c): _*),
+    materialized = if (ephemeral) "ephemeral" else "view")
+
+  /** The warehouse columns of a relation: some of the base columns
+    * plus one the YAML never lists, in random order.
+    */
+  private val relation: Gen[ListMap[String, Introspection.IntrospectedColumn]] = for {
+    picked <- Gen.someOf(BaseColumns :+ "loaded_at")
+    keys <- Gen.listOfN(picked.size, Gen.choose(0, 1000))
+  } yield ListMap(picked.toSeq.zip(keys).sortBy(_._2).map(_._1).zipWithIndex.map {
+    case (c, i) => c -> Introspection.IntrospectedColumn(c, "BIGINT", i)
+  }: _*)
+
+  private val pipelineCase: Gen[PipelineCase] = for {
+    n <- Gen.choose(2, 40)
+    keys <- Gen.listOfN(n, Gen.choose(0, 999))
+    ids = keys.zipWithIndex.map { case (k, i) => f"n$k%03d_$i" }
+    nodes <- ids.foldLeft(Gen.const(Vector.empty[NodeMeta])) { (acc, id) =>
+      acc.flatMap(built => pipelineNode(id, built.map(_.uniqueId)).map(built :+ _))
+    }
+    relations <- Gen.listOfN(n, relation)
+    s <- engineSettings
+    filter <- Gen.oneOf(NodeFilters.NodeFilter(), NodeFilters.NodeFilter(),
+      NodeFilters.NodeFilter(fqnPrefixes = Seq("marts")),
+      NodeFilters.NodeFilter(includeExternal = true))
+  } yield PipelineCase(nodes, nodes.map(_.uniqueId).zip(relations).toMap, filter, s)
+
+  /** Reads every ancestor: one past the longest ancestor description,
+    * so a node that saw an ancestor's update, or missed one, differs.
+    */
+  private val depth: (Manifest, NodeMeta) => NodeMeta = (m, n) => {
+    val longest = NodeFilters.ancestorTree(m, n).values.flatten
+      .filter(_ != n.uniqueId).flatMap(m.get).map(_.description.length).maxOption
+    n.copy(description = "d" * (longest.getOrElse(0) + 1))
+  }
+
+  private def steps(c: PipelineCase): Seq[(String, (Manifest, NodeMeta) => NodeMeta)] = Seq(
+    "inject" -> ((_, n) => Transforms.injectMissingColumns(n, c.incoming(n.uniqueId), c.settings)),
+    "inherit" -> ((m, n) => Inheritance.inheritUpstreamColumnKnowledge(m, n, c.settings)),
+    "depth" -> depth,
+    "sort" -> ((_, n) => Transforms.sortColumnsAsConfigured(n, c.incoming(n.uniqueId), c.settings)),
+    "inherit-again" -> ((m, n) => Inheritance.inheritUpstreamColumnKnowledge(m, n, c.settings)))
+
+  /** What a run shows: the manifest with each node's column order and
+    * each step's mutation count, or the exception it threw.
+    */
+  private def outcome(run: => Transforms.PipelineResult): Any =
+    scala.util.Try(run) match {
+      case scala.util.Success(r) => (r.manifest, r.manifest.nodes.values.map(n =>
+        n.uniqueId -> n.columns.keys.toSeq).toSeq, r.steps.map(s => s.name -> s.mutated))
+      case scala.util.Failure(e) => (e.getClass, e.getMessage)
+    }
+
+  private def agree(c: PipelineCase,
+      steps: Seq[(String, (Manifest, NodeMeta) => NodeMeta)]): Unit = {
+    val manifest = Manifest(c.nodes)
+    assert(outcome(Transforms.Pipeline(steps).run(manifest, c.filter)) ==
+      outcome(LegacyPipeline(steps).run(manifest, c.filter)))
+  }
+
+  test("the pipeline's waves give the sequential pipeline's manifest and counts") {
+    var widest = 0
+    var laterAncestor = false
+    forSeeds(pipelineCase, 300) { c =>
+      agree(c, steps(c))
+      val m = Manifest(c.nodes)
+      val ordered = NodeFilters.topologicalSort(NodeFilters.candidates(m, c.filter))
+      widest = math.max(widest,
+        Transforms.Pipeline.waves(m, ordered.toIndexedSeq).map(_.size).maxOption.getOrElse(0))
+      val position = ordered.map(_.uniqueId).zipWithIndex.toMap
+      laterAncestor ||= ordered.exists(x => NodeFilters.ancestorTree(m, x).values.flatten
+        .exists(a => position.get(a).exists(_ > position(x.uniqueId))))
+    }
+    // the cases reach wide waves and ancestors that sort after a node
+    assert(widest >= 5)
+    assert(laterAncestor)
+  }
+
+  test("the pipeline rethrows the first failure in topological order") {
+    forSeeds(pipelineCase, 300) { c =>
+      val boom: (Manifest, NodeMeta) => NodeMeta = (m, n) =>
+        if (n.name.hashCode % 3 == 0 || depth(m, n).description.length > 3)
+          throw new IllegalStateException(s"boom ${n.uniqueId}")
+        else n
+      val (before, after) = steps(c).splitAt(3)
+      agree(c, before ++ Seq("boom" -> boom) ++ after)
+    }
+  }
 }

@@ -737,4 +737,57 @@ class YamlPlaneSpec extends AnyFunSuite {
     val err = Validation.validateSql(spark, "SELECT no_such_col FROM orders")
     assert(err.exists(_.contains("no_such_col")))
   }
+
+  test("concurrent reads and buffers on distinct files commit every edit once, " +
+      "with the bytes of a sequential run") {
+    val files = (0 until 40).map(i => s"models/m$i/schema.yml")
+    def project(): Path = {
+      val root = tmpRoot()
+      files.zipWithIndex.foreach { case (f, i) =>
+        val p = root.resolve(f)
+        Files.createDirectories(p.getParent)
+        Files.writeString(p,
+          s"""# file $i
+             |version: 2
+             |models:
+             |  - name: m$i  # inline
+             |    columns:
+             |      - name: id
+             |""".stripMargin)
+      }
+      root
+    }
+    def edit(doc: YamlIO.YamlDoc, i: Int): YamlIO.YamlDoc = {
+      val models = doc.managed("models").asInstanceOf[Seq[Map[String, Any]]]
+      doc.copy(managed = doc.managed.updated("models",
+        models.map(_.updated("description", s"model $i"))))
+    }
+    val sequential = project()
+    YamlIO.invalidate()
+    files.zipWithIndex.foreach { case (f, i) =>
+      val p = sequential.resolve(f)
+      YamlIO.write(p, edit(YamlIO.read(p), i))
+    }
+    val concurrent = project()
+    YamlIO.invalidate()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val tasks = files.zipWithIndex.map { case (f, i) =>
+        pool.submit(new Runnable {
+          def run(): Unit = {
+            val p = concurrent.resolve(f)
+            YamlIO.buffer(p, edit(YamlIO.read(p), i))
+          }
+        })
+      }
+      tasks.foreach(_.get())
+    } finally pool.shutdown()
+    val written = YamlIO.commit()
+    assert(written.sorted == files.map(concurrent.resolve).sorted)
+    assert(YamlIO.pending().isEmpty)
+    assert(YamlIO.commit().isEmpty)
+    for (f <- files)
+      assert(Files.readString(concurrent.resolve(f)) == Files.readString(sequential.resolve(f)), f)
+    assert(Files.readString(concurrent.resolve(files(3))).contains("# inline"))
+  }
 }
